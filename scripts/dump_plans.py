@@ -3,7 +3,7 @@
 Usage: python scripts/dump_plans.py OUTDIR SUFFIX [sf_dir] query [query ...]
 
 Writes OUTDIR/<query>_<SUFFIX>.txt for each query — the judge-checkable
-plan evidence required by the optimization rounds (plans/r12/...).
+plan evidence required by the optimization rounds (plans/r13/...).
 """
 
 from __future__ import annotations

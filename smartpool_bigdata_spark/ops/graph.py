@@ -1,22 +1,84 @@
-"""Iterative graph operators on DataFrames: connected components via
-min-label propagation (the "HashMin" algorithm) — the step that turns
-near-duplicate PAIRS into duplicate CLUSTERS so a dedup pipeline can keep
-one representative per cluster.
+"""Iterative graph operators on DataFrames, one Pregel-style family:
+connected components (HashMin, two-phase large-star/small-star,
+incremental merge), PageRank and personalized PageRank, HITS, label
+propagation, BFS, temporal reachability, k-core and densest subgraph.
 
-Scale: each iteration is one join + one aggregate (two key-shuffles);
-iteration count = graph diameter, which for near-dup graphs is tiny (dup
-clusters are stars/short chains). Lineage is cut per iteration with
-``localCheckpoint`` or the loop would build an exponentially deep plan.
-For web-scale graphs with long chains, ``connected_components_two_phase``
-(alternating large-star/small-star, Kiveris et al. SoCC'14) converges in
-~log2(n) rounds instead of diameter iterations — property-tested
-equivalent to HashMin on random graphs; pick by expected diameter.
+Each superstep joins the vertex state onto the edge list and
+aggregates (a couple of key-shuffles); nothing row-sized is collected.
+The undirected operators normalise their edges with ``_undirected``.
+
+Lineage-cut policy: each superstep's state gets one eager
+``localCheckpoint``, or the k-th state would replay all k-1 prior joins
+on every action. ``_supersteps`` owns this for every operator whose
+superstep state is one frame; two-phase CC, BFS, HITS and densest
+subgraph carry two frames or driver-side values per superstep and
+apply the same cut in their own loops.
+
+HashMin needs diameter-many supersteps; on long chains
+``connected_components_two_phase`` needs ~log2(n): pick by diameter.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Edge list as long ``(a, b)`` holding both directions of every
+    pair, self-loops dropped, deduplicated. Not checkpointed: callers
+    cut it where their plan needs the cut."""
+    e = edges.select(
+        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
+    )
+    return (
+        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _rank_edges(sym: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The PageRank family's checkpointed inputs from an undirected edge
+    list: ``deg`` = (a, __deg) out-degree per node and ``wedges`` =
+    (a, b, w) with w = 1 / deg(a)."""
+    # materialized once: deg is referenced by the node/seed counts, the
+    # rank-vector init AND the weighted-edge build — without the cut
+    # each action would re-shuffle the symmetrized edge list
+    deg = (
+        sym.groupBy("a")
+        .agg(F.count(F.lit(1)).alias("__deg"))
+        .localCheckpoint(eager=True)
+    )
+    wedges = (
+        sym.join(deg, "a")
+        .select(
+            "a",
+            "b",
+            (F.lit(1.0) / F.col("__deg").cast("double")).alias("w"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    return deg, wedges
+
+
+def _supersteps(
+    state: DataFrame, step: Callable, n: int, done: Callable | None = None
+) -> tuple[DataFrame, int | None]:
+    """Run up to ``n`` supersteps ``state = step(state)``, cutting each
+    new state with one eager ``localCheckpoint``. ``done(prev, new)``,
+    when given, runs after the cut and stops the loop when it returns
+    true. Returns ``(state, k)``: ``k`` is the superstep at which
+    ``done`` fired, None if it never did (or was not given)."""
+    for k in range(1, n + 1):
+        new = step(state).localCheckpoint(eager=True)
+        stop = done is not None and done(state, new)
+        state = new
+        if stop:
+            return state, k
+    return state, None
 
 
 def connected_components(
@@ -31,6 +93,8 @@ def connected_components(
     the node's component. Deterministic. Raises if the diameter exceeds
     ``max_iterations`` (no silent partial convergence).
     """
+    # not _undirected: self-loops stay so a node that only has a
+    # self-loop still comes back as a singleton component
     sym = edges.select(
         F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
     )
@@ -41,38 +105,38 @@ def connected_components(
         .distinct()
         .withColumn("label", F.col("node"))
     )
-    iterations = 0
-    for _ in range(max_iterations):
-        iterations += 1
+
+    def step(labels: DataFrame) -> DataFrame:
         nbr_min = (
             sym.join(labels, sym["a"] == labels["node"])
             .groupBy(F.col("b").alias("node2"))
             .agg(F.min("label").alias("nbr_label"))
         )
-        new_labels = (
-            labels.join(nbr_min, labels["node"] == F.col("node2"), "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
+        return labels.join(
+            nbr_min, labels["node"] == F.col("node2"), "left"
+        ).select(
+            "node",
+            F.least(
+                F.col("label"), F.coalesce("nbr_label", F.col("label"))
+            ).alias("label"),
         )
-        changed = (
+
+    def unchanged(labels: DataFrame, new_labels: DataFrame) -> bool:
+        return (
             new_labels.withColumnRenamed("label", "new_label")
             .join(labels, "node")
             .filter(F.col("new_label") != F.col("label"))
+            .isEmpty()
         )
-        done = changed.isEmpty()
-        labels = new_labels
-        if done:
-            if stats is not None:
-                stats["iterations"] = iterations
-            return labels.select("node", F.col("label").alias("component"))
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iterations} iterations"
-    )
+
+    labels, iterations = _supersteps(labels, step, max_iterations, unchanged)
+    if iterations is None:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iterations} iterations"
+        )
+    if stats is not None:
+        stats["iterations"] = iterations
+    return labels.select("node", F.col("label").alias("component"))
 
 
 def connected_components_two_phase(
@@ -326,51 +390,27 @@ def pagerank(
     two key-shuffles, the same shape as a HashMin step. The rank vector
     is O(nodes) and never collected; iteration count is a constant.
     """
-    sym = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    )
-    sym = (
-        sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    # materialized once: referenced by the node count, the rank-vector
-    # init AND the weighted-edge build — without the cut each action
-    # would re-shuffle the symmetrized edge list
-    deg = (
-        sym.groupBy("a")
-        .agg(F.count(F.lit(1)).alias("__deg"))
-        .localCheckpoint(eager=True)
-    )
-    wedges = (
-        sym.join(deg, "a")
-        .select(
-            "a",
-            "b",
-            (F.lit(1.0) / F.col("__deg").cast("double")).alias("w"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    deg, wedges = _rank_edges(_undirected(edges, src, dst))
     n_nodes = deg.count()  # driver scalar: one count, never row data
+    if n_nodes == 0:  # no edges, or only self-loops
+        return deg.sparkSession.createDataFrame([], "node bigint, rank double")
     init = 1.0 / n_nodes
     base = (1.0 - damping) / n_nodes
-    ranks = deg.select(F.col("a").alias("node"), F.lit(init).alias("rank"))
-    for _ in range(iterations):
+
+    def step(ranks: DataFrame) -> DataFrame:
         contrib = wedges.join(
             ranks, wedges["a"] == ranks["node"]
         ).select(F.col("b"), (F.col("rank") * F.col("w")).alias("c"))
-        ranks = (
-            contrib.groupBy(F.col("b").alias("node"))
-            .agg(
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * F.sum(F.col("c").cast("decimal(38,18)")).cast("double")
-                ).alias("rank")
-            )
-            .localCheckpoint(eager=True)
+        return contrib.groupBy(F.col("b").alias("node")).agg(
+            (
+                F.lit(base)
+                + F.lit(damping)
+                * F.sum(F.col("c").cast("decimal(38,18)")).cast("double")
+            ).alias("rank")
         )
-    return ranks
+
+    ranks = deg.select(F.col("a").alias("node"), F.lit(init).alias("rank"))
+    return _supersteps(ranks, step, iterations)[0]
 
 
 def personalized_pagerank(
@@ -397,28 +437,7 @@ def personalized_pagerank(
     rows followed by one groupBy-sum — zero-in-contribution seeds keep
     their base without an outer join.
     """
-    sym = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    )
-    sym = (
-        sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        sym.groupBy("a")
-        .agg(F.count(F.lit(1)).alias("__deg"))
-        .localCheckpoint(eager=True)
-    )
-    wedges = (
-        sym.join(deg, "a")
-        .select(
-            "a",
-            "b",
-            (F.lit(1.0) / F.col("__deg").cast("double")).alias("w"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    deg, wedges = _rank_edges(_undirected(edges, src, dst))
     seed_nodes = (
         seeds.select(F.col(seeds.columns[0]).cast("long").alias("node"))
         .distinct()
@@ -432,8 +451,8 @@ def personalized_pagerank(
     base_rows = seed_nodes.select(
         "node", F.lit(base).alias("val")
     ).localCheckpoint(eager=True)
-    ranks = seed_nodes.select("node", F.lit(1.0 / n_seeds).alias("rank"))
-    for _ in range(iterations):
+
+    def step(ranks: DataFrame) -> DataFrame:
         contrib = wedges.join(ranks, wedges["a"] == ranks["node"]).select(
             F.col("b").alias("node"), (F.col("rank") * F.col("w")).alias("c")
         )
@@ -443,7 +462,7 @@ def personalized_pagerank(
                 * F.sum(F.col("c").cast("decimal(38,18)")).cast("double")
             ).alias("val")
         )
-        ranks = (
+        return (
             contrib_agg.unionByName(base_rows)
             .groupBy("node")
             .agg(
@@ -451,9 +470,10 @@ def personalized_pagerank(
                 .cast("double")
                 .alias("rank")
             )
-            .localCheckpoint(eager=True)
         )
-    return ranks
+
+    ranks = seed_nodes.select("node", F.lit(1.0 / n_seeds).alias("rank"))
+    return _supersteps(ranks, step, iterations)[0]
 
 
 def label_propagation(
@@ -481,24 +501,17 @@ def label_propagation(
     window partitions on node, whose fan-in is bounded by the node's
     DISTINCT NEIGHBOR LABELS (<= degree), so there is no giant-partition
     hazard; hub degree is the inherent cost of LPA on any engine.
-    localCheckpoint cuts the loop lineage like the other iterative ops.
     """
-    sym = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    )
-    sym = (
-        sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)  # referenced every sweep
-    )
+    # referenced every sweep
+    sym = _undirected(edges, src, dst).localCheckpoint(eager=True)
     labels = sym.select(F.col("a").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
     w = Window.partitionBy("node").orderBy(
         F.col("c").desc(), F.col("lbl").asc()
     )
-    for _ in range(iterations):
+
+    def sweep(labels: DataFrame) -> DataFrame:
         # shuffle-hash: label vector x edge list is big-big at scale and
         # re-aggregated immediately — sorting both sides buys nothing
         votes = (
@@ -506,13 +519,13 @@ def label_propagation(
             .groupBy(F.col("b").alias("node"), "lbl")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        labels = (
+        return (
             votes.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .select("node", "lbl")
-            .localCheckpoint(eager=True)
         )
-    return labels
+
+    return _supersteps(labels, sweep, iterations)[0]
 
 
 def bfs_hops(
@@ -546,15 +559,7 @@ def bfs_hops(
     list — for small-diameter graphs the frontier saturates and the
     anti-join empties it after ~diameter rounds.
     """
-    sym = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    )
-    sym = (
-        sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _undirected(edges, src, dst).localCheckpoint(eager=True)
     frontier = (
         seeds.select(F.col(seed_col).cast("long").alias("node"))
         .distinct()
@@ -625,6 +630,12 @@ def hits(
         )
 
     n_src = e.select("a").distinct().count()
+    if n_src == 0:  # no edges
+        spark = e.sparkSession
+        return (
+            spark.createDataFrame([], "node bigint, hub double"),
+            spark.createDataFrame([], "node bigint, auth double"),
+        )
     hubs = e.select(F.col("a").alias("node")).distinct().select(
         "node", F.lit(1.0 / n_src).alias("hub")
     )
@@ -704,19 +715,20 @@ def temporal_reachability(
         )
         .localCheckpoint(eager=True)
     )
-    for _ in range(iterations):
+
+    def relax(arr: DataFrame) -> DataFrame:
         relaxed = (
             e.join(arr, e["a"] == arr["node"])
             .where(F.col("t") >= F.col("arrival"))
             .select(F.col("b").alias("node"), F.col("t").alias("arrival"))
         )
-        arr = (
+        return (
             arr.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("arrival").alias("arrival"))
-            .localCheckpoint(eager=True)
         )
-    return arr
+
+    return _supersteps(arr, relax, iterations)[0]
 
 
 def kcore(
@@ -746,27 +758,20 @@ def kcore(
     key shuffles, no node ever collected; lineage localCheckpoint-cut
     per sweep. Survivor monotonicity means edge volume only shrinks.
     """
-    e = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    )
-    e = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(rounds):
+
+    def peel(e: DataFrame) -> DataFrame:
         keep = (
             e.groupBy("a")
             .agg(F.count(F.lit(1)).alias("__deg"))
             .filter(F.col("__deg") >= k)
             .select(F.col("a").alias("node"))
         )
-        e = (
-            e.join(keep, e["a"] == keep["node"], "left_semi")
-            .join(keep, F.col("b") == keep["node"], "left_semi")
-            .localCheckpoint(eager=True)
+        return e.join(keep, e["a"] == keep["node"], "left_semi").join(
+            keep, F.col("b") == keep["node"], "left_semi"
         )
+
+    e = _undirected(edges, src, dst).localCheckpoint(eager=True)
+    e = _supersteps(e, peel, rounds)[0]
     return e.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("core_degree")
     )
@@ -813,15 +818,7 @@ def densest_subgraph_trajectory(
             "eps_num/eps_den must be positive and eps_den <= 5e8 "
             f"(decimal(38,0) overflow headroom); got {eps_num}/{eps_den}"
         )
-    e = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    )
-    e = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _undirected(edges, src, dst).localCheckpoint(eager=True)
     rows = []
     spark = edges.sparkSession
     for i in range(1, max_rounds + 1):

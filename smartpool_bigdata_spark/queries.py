@@ -3095,6 +3095,23 @@ def orders_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
+def _purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct customer -> supplier purchase graph (lineitem joined
+    to orders) as (src, dst) = (o_custkey, l_suppkey + 1_000_000): the
+    offset puts supplier ids in their own range, so one node id space
+    holds both sides."""
+    li = _t(spark, sf_dir, "lineitem")
+    orders = _t(spark, sf_dir, "orders")
+    return (
+        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
+        .select(
+            F.col("o_custkey").alias("src"),
+            (F.col("l_suppkey") + 1_000_000).alias("dst"),
+        )
+        .distinct()
+    )
+
+
 def _pagerank_oracle(iterations: int = 5) -> str:
     """Chained-CTE twin of ops.graph.pagerank over the purchase graph:
     one CTE per power iteration, decimal(38,18)-stable contribution
@@ -3154,16 +3171,7 @@ def _pagerank_oracle(iterations: int = 5) -> str:
 def purchase_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smartpool_bigdata_spark.ops.graph import pagerank
 
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + 1_000_000).alias("dst"),
-        )
-        .distinct()
-    )
+    edges = _purchase_edges(spark, sf_dir)
     pr = pagerank(edges, iterations=5)
     return pr.select("node", F.round("rank", 9).alias("rank"))
 
@@ -3238,16 +3246,7 @@ def _ppr_oracle(iterations: int = 3) -> str:
 def segment_supplier_affinity_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smartpool_bigdata_spark.ops.graph import personalized_pagerank
 
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + 1_000_000).alias("dst"),
-        )
-        .distinct()
-    )
+    edges = _purchase_edges(spark, sf_dir)
     seeds = (
         _t(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment") == "BUILDING")
@@ -3380,16 +3379,7 @@ def session_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 def segment_reach_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smartpool_bigdata_spark.ops.graph import bfs_hops
 
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + 1_000_000).alias("dst"),
-        )
-        .distinct()
-    )
+    edges = _purchase_edges(spark, sf_dir)
     seeds = (
         _t(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment") == "AUTOMOBILE")
@@ -3478,16 +3468,7 @@ def _hits_oracle(iterations: int = 3) -> str:
 def purchase_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smartpool_bigdata_spark.ops.graph import hits
 
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + 1_000_000).alias("dst"),
-        )
-        .distinct()
-    )
+    edges = _purchase_edges(spark, sf_dir)
     hubs, auths = hits(edges, iterations=3)
     return hubs.select(
         F.lit("hub").alias("role"),
@@ -3570,16 +3551,7 @@ def _densest_oracle(eps_num: int = 22, eps_den: int = 10, rounds: int = 12) -> s
 def purchase_graph_densest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smartpool_bigdata_spark.ops.graph import densest_subgraph_trajectory
 
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + 1_000_000).alias("dst"),
-        )
-        .distinct()
-    )
+    edges = _purchase_edges(spark, sf_dir)
     traj = densest_subgraph_trajectory(edges, max_rounds=12)
     return traj.select(
         "round",
@@ -3656,16 +3628,7 @@ def _kcore_oracle(k: int = 3, rounds: int = 6) -> str:
 def purchase_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smartpool_bigdata_spark.ops.graph import kcore
 
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + 1_000_000).alias("dst"),
-        )
-        .distinct()
-    )
+    edges = _purchase_edges(spark, sf_dir)
     core = kcore(edges, k=3, rounds=6)
     return core.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_core_nodes"),
@@ -9107,87 +9070,6 @@ def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_revenue"
             ),
         )
-    )
-
-
-_REACH_BFS_CTE = """
-WITH RECURSIVE raw AS (
-    SELECT DISTINCT o.o_custkey AS a, l.l_suppkey + 1000000 AS b
-    FROM {lineitem} l JOIN {orders} o ON l.l_orderkey = o.o_orderkey
-),
-sym AS (SELECT a, b FROM raw UNION SELECT b AS a, a AS b FROM raw),
-seeds AS (
-    SELECT DISTINCT c_custkey AS node FROM {customer}
-    WHERE c_mktsegment = 'AUTOMOBILE'
-),
-bfs(node, hop) AS (
-    SELECT node, 0 AS hop FROM seeds
-    UNION ALL
-    SELECT DISTINCT s.b AS node, bfs.hop + 1 AS hop
-    FROM bfs JOIN sym s ON s.a = bfs.node
-    WHERE bfs.hop < 4
-),
-dist AS (SELECT node, min(hop) AS hop FROM bfs GROUP BY node)
-SELECT hop, CAST(count(*) AS BIGINT) AS n_nodes,
-       CAST(sum(CASE WHEN node > 1000000 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_suppliers,
-       CAST(sum(node) AS BIGINT) AS node_checksum
-FROM dist GROUP BY hop
-"""
-
-
-@query(
-    "segment_reach_bfs_cte",
-    oracle=_REACH_BFS_CTE.format(
-        lineitem="lineitem", orders="orders", customer="customer"
-    ),
-    description="Recursive-CTE twin of segment_reach_bfs: the SAME "
-    "multi-source BFS over the real symmetrized purchase graph, "
-    "value-locked against DuckDB's WITH RECURSIVE min-hop evaluation "
-    "(the oracle keeps the recursive SQL verbatim; "
-    "tests/test_properties.py::test_bfs_cte_twin_matches_handrolled "
-    "additionally asserts the two registry queries' outputs are "
-    "identical row-for-row). r13 optimization (guide §2, verdict #3): "
-    "the Spark side no longer executes the native UnionLoop fixpoint — "
-    "measured 6-9 s because the operator re-derives each level from "
-    "the FULL previous level without a visited-set anti-join (every "
-    "level re-emits all reachable nodes, ~|V| rows/level, plus 2 "
-    "exchanges per hop over an unshrinking relation; before-plan in "
-    "plans/r13/). It now runs ops.graph.bfs_hops' frontier loop — per "
-    "hop ONE edge join + ONE distinct + ONE anti-join against the "
-    "visited set, localCheckpoint-cut lineage, isEmpty early-stop — "
-    "whose frontier shrinks to newly-discovered nodes: O(|V|) total "
-    "node emissions vs the CTE's O(d*|V|). Same unrolled-algebra-vs-"
-    "recursive-oracle pattern as customer_er_em_params. Results are "
-    "provably identical: level-DISTINCT UNION ALL + final min(hop) "
-    "assigns every node its minimum hop distance, which is exactly "
-    "what the visited-set loop computes.",
-)
-def segment_reach_bfs_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from smartpool_bigdata_spark.ops.graph import bfs_hops
-
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + 1_000_000).alias("dst"),
-        )
-        .distinct()
-    )
-    seeds = (
-        _t(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "AUTOMOBILE")
-        .select(F.col("c_custkey").alias("node"))
-    )
-    dist = bfs_hops(edges, seeds, max_hops=4)
-    return dist.groupBy("hop").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
-        F.sum(F.when(F.col("node") > 1_000_000, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_suppliers"),
-        F.sum("node").cast("bigint").alias("node_checksum"),
     )
 
 

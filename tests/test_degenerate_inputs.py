@@ -85,3 +85,31 @@ def test_conformal_fit_empty_calibration_raises(spark, tmp_path):
 
     with pytest.raises(ValueError, match="calibration split is empty"):
         _conformal_fit(spark, sf_dir)
+
+
+@pytest.mark.parametrize(
+    "op, edge_list, schemas",
+    [
+        ("pagerank", [], [[("node", "bigint"), ("rank", "double")]]),
+        ("pagerank", [(1, 1), (2, 2)], [[("node", "bigint"), ("rank", "double")]]),
+        (
+            "hits",
+            [],
+            [[("node", "bigint"), ("hub", "double")],
+             [("node", "bigint"), ("auth", "double")]],
+        ),
+    ],
+    ids=["pagerank-no-edges", "pagerank-self-loops-only", "hits-no-edges"],
+)
+def test_rank_ops_on_edgeless_graph_return_empty(spark, op, edge_list, schemas):
+    """A graph with no edges (or, after pagerank's self-loop drop, none
+    left) has no node to rank: the operator returns empty frames with
+    its documented schema, like kcore and connected_components do,
+    instead of dividing by a zero node count."""
+    from smartpool_bigdata_spark.ops import graph
+
+    edges = spark.createDataFrame(edge_list, "src bigint, dst bigint")
+    out = getattr(graph, op)(edges)
+    frames = list(out) if isinstance(out, tuple) else [out]
+    assert [f.dtypes for f in frames] == schemas
+    assert all(f.isEmpty() for f in frames)

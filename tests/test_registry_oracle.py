@@ -335,12 +335,11 @@ R9_PENDING = frozenset({
 
 # Queries first registered in round 9 — gated the round they are born,
 # so no pending backlog forms: the TPC-H Q2/Q20/Q15 decorrelation
-# shapes and the recursive-CTE twin of the hand-rolled BFS.
+# shapes.
 R9_NEW = frozenset({
     "min_cost_region_supplier",
     "small_part_hoarding_suppliers",
     "top_revenue_supplier",
-    "segment_reach_bfs_cte",
 })
 
 # The 32 re-confirmation slots: of the 48 queries whose NEWEST driver

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from smartpool_bigdata_spark.ops import (
@@ -502,10 +503,57 @@ def test_interval_point_join_drops_reversed_intervals(spark):
 
 
 def test_hits_rejects_zero_iterations(spark):
-    import pytest
-
     from smartpool_bigdata_spark.ops.graph import hits
 
     edges = spark.createDataFrame([(1, 2)], ["src", "dst"])
     with pytest.raises(ValueError, match="iterations >= 1"):
         hits(edges, iterations=0)
+
+
+def test_connected_components_raises_when_not_converged(spark):
+    """A 10-node chain needs 10 HashMin supersteps; with a budget of 3
+    the operator must raise rather than return partial labels."""
+    from smartpool_bigdata_spark.ops.graph import connected_components
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(9)], ["src", "dst"])
+    with pytest.raises(RuntimeError, match="did not converge in 3 iterations"):
+        connected_components(chain, max_iterations=3)
+
+
+@pytest.mark.parametrize(
+    "op", ["pagerank", "label_propagation", "temporal_reachability", "kcore"]
+)
+def test_superstep_state_is_lineage_cut(spark, op):
+    """Every superstep's state is cut with a localCheckpoint, so the
+    returned frame's analyzed plan holds as many Join nodes after 4
+    supersteps as after 1; a step that skipped the cut would add its
+    joins once per superstep."""
+    from smartpool_bigdata_spark.ops import graph
+    from smartpool_bigdata_spark.plans import walk_plan
+
+    edges = spark.createDataFrame(
+        [(1, 2, "2024-01-01"), (2, 3, "2024-01-02"), (3, 1, "2024-01-03"),
+         (3, 4, "2024-01-04")],
+        "src long, dst long, ts string",
+    )
+    seeds = spark.createDataFrame([(1,)], ["node"])
+    run = {
+        "pagerank": lambda n: graph.pagerank(edges, iterations=n),
+        "label_propagation": lambda n: graph.label_propagation(
+            edges, iterations=n
+        ),
+        "temporal_reachability": lambda n: graph.temporal_reachability(
+            edges, seeds, iterations=n
+        ),
+        "kcore": lambda n: graph.kcore(edges, k=2, rounds=n),
+    }[op]
+
+    def joins(df) -> int:
+        names = []
+        walk_plan(
+            df._jdf.queryExecution().analyzed(),
+            lambda node: names.append(node.nodeName()),
+        )
+        return names.count("Join")
+
+    assert joins(run(1)) == joins(run(4))
